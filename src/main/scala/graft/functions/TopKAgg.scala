@@ -8,8 +8,14 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggreg
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
+/** A bounded top-k under the (score DESC, id ASC) order: what a scan
+  * kernel inserts into. */
+trait TopKSink {
+  def insert(s: Double, i: Long): Unit
+}
+
 /** Bounded top-k buffer: keeps the k best (score DESC, id ASC) pairs. */
-final class TopKBuffer(val k: Int) extends Serializable {
+final class TopKBuffer(val k: Int) extends TopKSink with Serializable {
   require(k > 0, s"k must be positive, got $k")
   // simple insertion into a sorted array — k is small (<= ~100)
   var size = 0

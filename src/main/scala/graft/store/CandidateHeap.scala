@@ -1,5 +1,7 @@
 package graft.store
 
+import graft.functions.TopKSink
+
 /** Bounded top-`k` candidate set under the (score DESC, id ASC) total
   * order, as a size-capped binary MIN-heap (root = current worst): insert
   * is O(log k) vs TopKBuffer's O(k) array shift — the difference between
@@ -10,7 +12,7 @@ package graft.store
   * (both keep the top k of the identical total order — ids are unique, so
   * the order is total and the kept set is insertion-order-independent).
   */
-private[store] final class CandidateHeap(val k: Int) {
+private[store] final class CandidateHeap(val k: Int) extends TopKSink {
   require(k > 0, s"k must be positive, got $k")
   var size = 0
   val scores = new Array[Double](k)

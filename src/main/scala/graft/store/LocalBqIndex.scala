@@ -1,88 +1,32 @@
 package graft.store
 
-import graft.functions.{TopKBuffer, VectorKernels}
+import graft.functions.VectorKernels
 
-/** In-process binary-quantization serving replica — the 1-bit twin of
-  * LocalPqIndex's ADC scan, measuring what sign-bit codes buy at serving
-  * time: each row costs ceil(dim/64) XOR+popcount word ops (2 at dim 128)
-  * instead of m=8 LUT reads (PQ) or dim multiply-accumulates (int8), and
-  * the whole 50k-row corpus is 8*words bytes/row (800 KB at dim 128 —
-  * L2-resident, 16x smaller than the int8 replica). Scores are the
-  * NEGATED Hamming distance (so TopKBuffer's score-DESC order ranks
-  * nearest first, ties by ascending id like every other tier);
-  * production rescores the top-candK exactly — Bench measures the raw
-  * scan, same protocol as the PQ number.
-  *
-  * Codes layout: row-major n*words longs (row r at [r*words, r*words+words)).
-  */
+/** In-process binary-quantization serving replica: each row costs
+  * ceil(dim/64) XOR+popcount word ops, and a 50k-row corpus at dim 128 is
+  * 800 KB (L2-resident, 16x smaller than int8). Scores are the NEGATED
+  * Hamming distance, ties by ascending id like every other tier. The
+  * one-cell, BQ-code, unrescored case of [[CellScan]]. `codes` is
+  * row-major n*words longs (row r at [r*words, r*words+words)). */
 final class LocalBqIndex(ids: Array[Long], codes: Array[Long], words: Int) {
   require(ids.nonEmpty, "empty index")
-  require(codes.length == ids.length * words,
-    s"codes ${codes.length} != ${ids.length}*$words")
+  require(codes.length == ids.length * words, s"codes ${codes.length} != ${ids.length}*$words")
+  private val e = CellScan.codesOnly(ids)
+  private val bq = new BqCode(codes, words)
   val count: Int = ids.length
 
-  // same worker-gang treatment as LocalIndex / LocalPqIndex (fair
-  // serving comparison): chunked row ranges, deterministic merge
-  private val MinChunk = 2048
-  private val maxThreads =
-    math.max(1, math.min(Runtime.getRuntime.availableProcessors(), 16))
-  private val gangSize = math.max(1, math.min(maxThreads, count / MinChunk))
-  private val gang = if (gangSize > 1) new ScanGang(gangSize) else null
-  private val gangLock = new java.util.concurrent.locks.ReentrantLock()
-
-  private def scanRange(lo: Int, hi: Int, q: Array[Long],
-                        buf: TopKBuffer): Unit = {
-    var r = lo
-    while (r < hi) {
-      val base = r * words
-      var ham = 0L
-      var w = 0
-      while (w < words) {
-        ham += java.lang.Long.bitCount(codes(base + w) ^ q(w))
-        w += 1
-      }
-      buf.insert(-ham.toDouble, ids(r))
-      r += 1
-    }
-  }
-
-  /** Top-`topK` by ascending Hamming distance (score = -hamming DESC,
-    * id ASC) for a pre-packed query code. */
-  def search(q: Array[Long], topK: Int): Seq[(Long, Double)] = {
-    require(q.length == words, s"query words ${q.length} != $words")
-    val merged = new TopKBuffer(topK)
-    if (gang != null && gangLock.tryLock()) {
-      try {
-        val per = (count + gangSize - 1) / gangSize
-        val bufs = new Array[TopKBuffer](gangSize)
-        gang.run { c =>
-          val lo = c * per
-          val hi = math.min(count, lo + per)
-          val buf = new TopKBuffer(topK)
-          scanRange(lo, hi, q, buf)
-          bufs(c) = buf
-        }
-        bufs.foreach(merged.mergeFrom)
-      } finally gangLock.unlock()
-    } else {
-      scanRange(0, count, q, merged)
-    }
-    (0 until merged.size).map(j => (merged.ids(j), merged.scores(j)))
-  }
+  /** Top-`topK` by ascending Hamming distance for a pre-packed query code. */
+  def search(q: Array[Long], topK: Int): Seq[(Long, Double)] =
+    e.search(e.allCells, bq.scan(q), topK)
 }
 
 object LocalBqIndex {
   /** Pack float vectors (ids aligned by index) into a replica. */
   def build(ids: Array[Long], vecs: Array[Array[Float]]): LocalBqIndex = {
     require(ids.length == vecs.length && ids.nonEmpty, "mismatched build input")
-    val words = (vecs(0).length + 63) / 64
+    val words = BqCode.words(vecs(0).length)
     val codes = new Array[Long](ids.length * words)
-    var r = 0
-    while (r < vecs.length) {
-      val c = VectorKernels.signPack(vecs(r))
-      System.arraycopy(c, 0, codes, r * words, words)
-      r += 1
-    }
+    vecs.indices.foreach(r => System.arraycopy(VectorKernels.signPack(vecs(r)), 0, codes, r * words, words))
     new LocalBqIndex(ids, codes, words)
   }
 }

@@ -1,296 +1,44 @@
 package graft.store
 
-import graft.functions.{SimdSupport, TopKBuffer, VectorKernels}
+import graft.functions.VectorKernels
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** IVF routing composed with 1-bit binary quantization + exact rescore —
-  * the Hamming twin of [[LocalIvfPqIndex]] (FAISS `IVFx,BQ`-style): route
-  * on the coarse centroids, XOR+popcount-scan only the probed cells'
-  * sign-bit codes (8*words bytes/row — 16 B at dim 128), exact-rescore
-  * the top `candK` Hamming candidates on their int8 codes. Composes the
-  * scan fraction of LocalIvfIndex with the bytes/row of LocalBqIndex;
-  * the int8 rescore array is touched candK rows per query, never scanned.
-  *
-  * Candidate selection scores by NEGATED Hamming distance (ties by
-  * cell-major row index); the rescore re-ranks by exact int8 cosine
-  * (score DESC, vec_id ASC). With candK >= the probed row count the
-  * result EQUALS the cell-restricted exact search (spec-gated).
-  *
-  * Flat cell-major layout like LocalIvfPqIndex: cell c's rows live at
-  * flat indexes [cellStart(c), cellStart(c+1)).
-  */
-final class LocalIvfBqIndex private (
-    unitCentroids: Array[Array[Float]],
-    cellStart: Array[Int],
-    idsFlat: Array[Long],
-    bqCodes: Array[Long],
-    int8: Array[Short],
-    norms: Array[Long],
-    words: Int,
-    val dim: Int) {
-
-  val numCells: Int = unitCentroids.length
-  val count: Int = idsFlat.length
+/** The Hamming twin of [[LocalIvfPqIndex]]: XOR+popcount-scan the probed
+  * cells' sign bits (16 B/row at dim 128), rescore the top `candK` in
+  * int8. With candK >= the probed rows it EQUALS exactInProbe. */
+final class LocalIvfBqIndex private (e: CellScan, bq: BqCode) {
+  val dim: Int = e.dim
+  val numCells: Int = e.numCells
+  val count: Int = e.count
 
   /** Rows Hamming-scanned by an `nprobe`-cell probe of this query. */
-  def probedRows(q: Array[Float], nprobe: Int): Int =
-    routeCells(q, nprobe).map(c => cellStart(c + 1) - cellStart(c)).sum
+  def probedRows(q: Array[Float], nprobe: Int): Int = e.probedRows(e.routeCells(q, nprobe))
 
-  private[store] def routeCells(q: Array[Float], nprobe: Int): Array[Int] = {
-    val scores = new Array[Double](numCells)
-    var c = 0
-    while (c < numCells) {
-      val cent = unitCentroids(c)
-      var s = 0.0
-      var i = 0
-      while (i < dim) { s += q(i).toDouble * cent(i); i += 1 }
-      scores(c) = s
-      c += 1
-    }
-    val order = (0 until numCells).sortBy(c => (-scores(c), c))
-    order.take(math.min(nprobe, numCells)).toArray
-  }
+  /** Same routing, exact int8 scan of EVERY probed row. */
+  def exactInProbe(q: Array[Float], topK: Int, nprobe: Int): Seq[(Long, Double)] =
+    e.exactInProbe(q, topK, nprobe)
 
-  private val MinChunk = 2048
-  private val maxThreads =
-    math.max(1, math.min(Runtime.getRuntime.availableProcessors(), 16))
-  private val gangSize = math.max(1, math.min(maxThreads, count / MinChunk))
-  private val gang = if (gangSize > 1) new ScanGang(gangSize) else null
-  private val gangLock = new java.util.concurrent.locks.ReentrantLock()
-
-  /** Hamming-scan one cell, candidates keyed by FLAT ROW INDEX. */
-  private def hammingScanCell(c: Int, qc: Array[Long], buf: CandidateHeap): Unit = {
-    var r = cellStart(c)
-    val end = cellStart(c + 1)
-    while (r < end) {
-      val base = r * words
-      var ham = 0L
-      var w = 0
-      while (w < words) {
-        ham += java.lang.Long.bitCount(bqCodes(base + w) ^ qc(w))
-        w += 1
-      }
-      buf.insert(-ham.toDouble, r.toLong)
-      r += 1
-    }
-  }
-
-  /** The rescore-everything reference path: identical routing, exact int8
-    * scan of EVERY probed row (no Hamming stage). search() with candK >=
-    * the probed row count must equal this bitwise (spec-gated); at
-    * nprobe = numCells it equals the flat tier's exact search. */
-  def exactInProbe(q: Array[Float], topK: Int, nprobe: Int): Seq[(Long, Double)] = {
-    require(q.length == dim, s"query dimension ${q.length} != $dim")
-    val qb = VectorKernels.quantize(q)
-    val qShort = new Array[Short](dim)
-    var i = 0
-    while (i < dim) { qShort(i) = qb(i).toShort; i += 1 }
-    val nq = VectorKernels.normSqInt8(qb)
-    val out = new TopKBuffer(topK)
-    routeCells(q, nprobe).foreach { c =>
-      SimdSupport.scan(int8, norms, idsFlat, cellStart(c), cellStart(c + 1),
-        dim, qShort, nq, out)
-    }
-    (0 until out.size).map(k => (out.ids(k), out.scores(k)))
-  }
-
-  /** Route -> Hamming scan probed cells -> exact int8 rescore of the top
-    * `candK` candidates -> top-`topK` (score DESC, vec_id ASC). */
-  def search(q: Array[Float], topK: Int, nprobe: Int, candK: Int): Seq[(Long, Double)] = {
-    require(q.length == dim, s"query dimension ${q.length} != $dim")
-    require(candK >= topK, s"candK $candK < topK $topK")
-    val qc = VectorKernels.signPack(q)
-    val cells = routeCells(q, nprobe)
-    val qb = VectorKernels.quantize(q)
-    val qShort = new Array[Short](dim)
-    var i = 0
-    while (i < dim) { qShort(i) = qb(i).toShort; i += 1 }
-    val nq = VectorKernels.normSqInt8(qb)
-    val out = new TopKBuffer(topK)
-    if (gang != null && cells.length > 1 && gangLock.tryLock()) {
-      try {
-        // ONE gang dispatch, three phases behind an internal barrier —
-        // the LocalIvfPqIndex.search shape (see the rationale there):
-        // parallel Hamming scan + in-worker sort, last-worker k-way head
-        // select, parallel scattered-row exact rescore.
-        val bufs = new Array[CandidateHeap](gang.n)
-        val outs = new Array[TopKBuffer](gang.n)
-        val candIdx = new Array[Int](candK)
-        val doneA = new java.util.concurrent.atomic.AtomicInteger(0)
-        val cnBox = new java.util.concurrent.atomic.AtomicInteger(-1)
-        gang.run { w =>
-          // Crash-safe barrier + select-publish — see LocalIvfPqIndex
-          // .search for the rationale (peers spin on cnBox; a missed
-          // publish is a process-wide hang under gangLock).
-          try {
-            val buf = new CandidateHeap(candK)
-            var ci = w
-            while (ci < cells.length) { hammingScanCell(cells(ci), qc, buf); ci += gang.n }
-            buf.sortIntoDesc()
-            bufs(w) = buf
-          } finally {
-            if (doneA.incrementAndGet() == gang.n) {
-              var cn = 0
-              try cn = CandidateSelect.kWayTopIdx(bufs, candK, candIdx)
-              finally cnBox.set(cn) // release: publishes candIdx (or the sentinel)
-            } else {
-              while (cnBox.get() < 0) Thread.onSpinWait()
-            }
-          }
-          val cn = cnBox.get()
-          val o = new TopKBuffer(topK)
-          var j = w
-          while (j < cn) {
-            val r = candIdx(j)
-            SimdSupport.scan(int8, norms, idsFlat, r, r + 1, dim, qShort, nq, o)
-            j += gang.n
-          }
-          outs(w) = o
-        }
-        outs.foreach(out.mergeFrom)
-      } finally gangLock.unlock()
-    } else {
-      val cand = new CandidateHeap(candK)
-      var ci = 0
-      while (ci < cells.length) { hammingScanCell(cells(ci), qc, cand); ci += 1 }
-      var j = 0
-      while (j < cand.size) {
-        val r = cand.ids(j).toInt
-        SimdSupport.scan(int8, norms, idsFlat, r, r + 1, dim, qShort, nq, out)
-        j += 1
-      }
-    }
-    (0 until out.size).map(k => (out.ids(k), out.scores(k)))
-  }
+  /** Route, Hamming-scan, rescore the top `candK` exactly: top-`topK`. */
+  def search(q: Array[Float], topK: Int, nprobe: Int, candK: Int): Seq[(Long, Double)] =
+    e.searchRescored(q, topK, nprobe, candK, v => bq.scan(VectorKernels.signPack(v)))
 }
 
 object LocalIvfBqIndex {
 
-  /** In-process replica of an at-rest [[IvfBqIndex]] layout: routes on
-    * the SAME saved centroids sidecar, Hamming-scans the SAME at-rest
-    * sign codes (training-free — there is no quantizer that can be
-    * stale), rescores on int8 quantized EXECUTOR-side from the
-    * caller-supplied float source (the at-rest layout keeps no floats).
-    * Same guards as LocalIvfPqIndex.fromAtRest: heap-limited,
-    * toLocalIterator-streamed, every indexed id must join a float row. */
-  def fromAtRest(spark: org.apache.spark.sql.SparkSession, path: String,
-      emb: org.apache.spark.sql.DataFrame,
+  /** Replica of an at-rest [[IvfBqIndex]] layout: its SAME centroids and
+    * sign codes, rescored in int8 from the float source `emb`, which must
+    * hold every indexed vec_id exactly once. */
+  def fromAtRest(spark: SparkSession, path: String, emb: DataFrame,
       maxLocalBytes: Long = QuantizedIndex.DefaultMaxLocalBytes): LocalIvfBqIndex = {
-    import org.apache.spark.sql.functions._
-    val centRows = spark.read.parquet(s"$path/centroids")
-      .select(col("cell"), col("centroid").cast("array<float>"))
-      .collect() // numCells rows — sidecar-sized
-      .map(r => r.getInt(0) -> r.getSeq[Float](1).toArray).sortBy(_._1)
-    require(centRows.nonEmpty, s"fromAtRest: no centroids under $path")
-    val cellOf = centRows.map(_._1).zipWithIndex.toMap
-    val dim = centRows(0)._2.length
-    val words = (dim + 63) / 64
-    val data = spark.read.parquet(s"$path/data")
-      .select(col("vec_id"), col("code"), col("cell"))
-      .join(emb.select(col("vec_id"), col("embedding")), "vec_id")
-      .select(col("vec_id"), col("code"), col("cell"),
-        graft.functions.VectorOps.quantizeInt8(
-          col("embedding").cast("array<float>")).as("q"))
-    val cellCounts = spark.read.parquet(s"$path/data")
-      .groupBy(col("cell")).count().collect()
-      .map(r => cellOf(r.getInt(0)) -> r.getLong(1)).toMap
-    val numCells = centRows.length
-    // guard BEFORE the .toInt conversions (LocalIvfIndex.fromAtRest's
-    // n <= Int.MaxValue check, mirrored — truncation must not precede
-    // the refusal)
-    val total = cellCounts.valuesIterator.sum
-    require(total <= Int.MaxValue, s"fromAtRest: corpus too large ($total rows)")
-    val cellStart = new Array[Int](numCells + 1)
-    var c = 0
-    var acc = 0L
-    while (c < numCells) {
-      acc += cellCounts.getOrElse(c, 0L)
-      cellStart(c + 1) = acc.toInt
-      c += 1
-    }
-    val n = cellStart(numCells).toLong
-    val peak = n * (8L * words + 7L * dim + 96L)
-    require(peak <= maxLocalBytes,
-      s"fromAtRest refused: materializing this corpus needs ~$peak bytes " +
-        s"of driver heap at peak (> limit $maxLocalBytes). Use IvfBqIndex" +
-        ".probe (distributed), or raise the limit explicitly.")
-    val idsFlat = new Array[Long](n.toInt)
-    val bqCodes = new Array[Long](n.toInt * words)
-    val int8 = new Array[Short](n.toInt * dim)
-    val norms = new Array[Long](n.toInt)
-    val fill = cellStart.clone()
-    var filled = 0L
-    val it = data.toLocalIterator()
-    while (it.hasNext) {
-      val r = it.next()
-      val cell = cellOf(r.getInt(2))
-      val slot = fill(cell)
-      fill(cell) = slot + 1
-      idsFlat(slot) = r.getLong(0)
-      val code = r.getSeq[Long](1)
-      require(code.length == words, s"fromAtRest: code width ${code.length} != $words")
-      var w = 0
-      while (w < words) { bqCodes(slot * words + w) = code(w); w += 1 }
-      val qb = r.getAs[Array[Byte]](3)
-      require(qb.length == dim, s"fromAtRest: embedding dim ${qb.length} != $dim")
-      val base = slot * dim
-      var i = 0
-      var nn = 0L
-      while (i < dim) {
-        val x = qb(i)
-        int8(base + i) = x.toShort
-        nn += x.toLong * x
-        i += 1
-      }
-      norms(slot) = nn
-      filled += 1
-    }
-    require(filled == n,
-      s"fromAtRest: $filled of $n code rows joined a float row — the " +
-        "rescore source must cover every indexed vec_id")
-    new LocalIvfBqIndex(centRows.map(_._2), cellStart, idsFlat, bqCodes,
-      int8, norms, words, dim)
+    val (e, bq) = CellScan.load(spark, path, emb, "code", d => 8L * BqCode.words(d) + 7L * d + 96,
+      maxLocalBytes, "IvfBqIndex.probe")(BqCode.apply)
+    new LocalIvfBqIndex(e, bq)
   }
 
-  /** Train: shared bounded k-means centroids, rows packed cell-major with
-    * sign-bit scan codes + int8 rescore codes. */
+  /** Train the k-means cells; sign-bit scan codes. */
   def train(ids: Array[Long], vecs: Array[Array[Float]], numCells: Int,
       nprobeSample: Int = 10000, iters: Int = 5, seed: Long = 11L): LocalIvfBqIndex = {
-    require(ids.length == vecs.length && ids.nonEmpty, "mismatched build input")
-    val cents = LocalIvfIndex.trainCentroids(vecs, numCells, nprobeSample, iters, seed)
-    val dim = vecs(0).length
-    val words = (dim + 63) / 64
-    val cells = vecs.map(LocalIvfIndex.argmaxCell(_, cents))
-    val counts = new Array[Int](numCells)
-    cells.foreach(c => counts(c) += 1)
-    val cellStart = new Array[Int](numCells + 1)
-    var c = 0
-    while (c < numCells) { cellStart(c + 1) = cellStart(c) + counts(c); c += 1 }
-    val n = ids.length
-    val idsFlat = new Array[Long](n)
-    val bqCodes = new Array[Long](n * words)
-    val int8 = new Array[Short](n * dim)
-    val norms = new Array[Long](n)
-    val fill = cellStart.clone()
-    var r = 0
-    while (r < n) {
-      val slot = fill(cells(r))
-      fill(cells(r)) = slot + 1
-      idsFlat(slot) = ids(r)
-      val bc = VectorKernels.signPack(vecs(r))
-      System.arraycopy(bc, 0, bqCodes, slot * words, words)
-      val qb = VectorKernels.quantize(vecs(r))
-      val base = slot * dim
-      var i = 0
-      var nn = 0L
-      while (i < dim) {
-        val x = qb(i)
-        int8(base + i) = x.toShort
-        nn += x.toLong * x
-        i += 1
-      }
-      norms(slot) = nn
-      r += 1
-    }
-    new LocalIvfBqIndex(cents, cellStart, idsFlat, bqCodes, int8, norms, words, dim)
+    val (e, bq) = CellScan.train(ids, vecs, numCells, nprobeSample, iters, seed)(BqCode.apply)
+    new LocalIvfBqIndex(e, bq)
   }
 }

@@ -1,286 +1,38 @@
 package graft.store
 
-import graft.functions.{SimdSupport, TopKBuffer, VectorKernels}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
-/** IVF-pruned in-process serving index — the everyday production serving
-  * shape the flat LocalIndex/LocalPqIndex/LocalBqIndex replicas lack:
-  * instead of scanning EVERY row per query, a query first ranks the
-  * coarse centroids (numCells dot products) and then SIMD-scans only its
-  * `nprobe` nearest cells, so per-query work is the routing cost plus a
-  * `nprobe / numCells` fraction of the corpus (e.g. 8 of 64 cells =
-  * 12.5% scan fraction). At the 50k bench operating point the flat scan
-  * is already fast; at serving-realistic 10M vectors the pruning IS the
-  * latency budget — same structure, same code path.
-  *
-  * Scores are the same exact-integer int8 cosine as LocalIndex
-  * (SimdSupport.scan over packed shorts), so the recall@10 of a probed
-  * search vs the flat scan is a pure routing property, spec-gated on the
-  * clustered fixture embeddings (LocalIvfSpec).
-  *
-  * Two builders mirror the at-rest tiers' maintenance contract:
-  *  - [[LocalIvfIndex.fromAtRest]] loads an [[IvfIndex]] layout and serves
-  *    it in-process, routing on the SAME saved centroids sidecar the
-  *    at-rest probes use (frozen-quantizer contract — a rebuild() that
-  *    refreshes the sidecar refreshes replicas on their next load);
-  *  - [[LocalIvfIndex.train]] runs a bounded driver-side spherical
-  *    k-means (sample init + Lloyd refinements) for corpora that have no
-  *    at-rest layout, e.g. the bench's synthetic 50k corpus.
-  *
-  * Concurrency: LocalIndex's exact model — a lone caller fans the probed
-  * cells out over the shared ScanGang (cells are independent scan units,
-  * so the fan-out is free of striping logic) for minimum latency;
-  * overlapping callers that lose the gang tryLock scan their probed
-  * cells on their own thread, so aggregate throughput scales with cores.
-  * All arrays are immutable after construction; TopKBuffer's total
-  * (score desc, id asc) order makes gang-merged and sequential results
-  * bitwise identical.
-  */
-final class LocalIvfIndex private (
-    unitCentroids: Array[Array[Float]],
-    cellIds: Array[Array[Long]],
-    cellData: Array[Array[Short]],
-    cellNorms: Array[Array[Long]],
-    val dim: Int) {
+/** IVF-pruned in-process serving index, the int8-code case of [[CellScan]]:
+  * a query (routed through its exact float copy) scans only its `nprobe`
+  * nearest cells with LocalIndex's exact int8 cosine, so recall against
+  * the flat scan is a pure routing property (LocalIvfSpec). */
+final class LocalIvfIndex private (e: CellScan) {
+  val dim: Int = e.dim
+  val numCells: Int = e.numCells
+  val count: Int = e.count
 
-  val numCells: Int = unitCentroids.length
-  val count: Int = cellIds.iterator.map(_.length).sum
-
-  /** Rows scanned by an `nprobe`-cell probe of this query — the measured
-    * scan fraction (spec + bench documentation hook). */
+  /** Rows scanned by an `nprobe`-cell probe of this query. */
   def probedRows(q: Array[Byte], nprobe: Int): Int =
-    routeCells(q, nprobe).map(cellIds(_).length).sum
+    e.probedRows(e.routeCells(q.map(_.toFloat), nprobe))
 
-  /** The query's top-`nprobe` cells by centroid cosine (unit centroids,
-    * so ranking by float dot; deterministic cell-id tie-break). */
-  private[store] def routeCells(q: Array[Byte], nprobe: Int): Array[Int] = {
-    val scores = new Array[Double](numCells)
-    var c = 0
-    while (c < numCells) {
-      val cent = unitCentroids(c)
-      var s = 0.0
-      var i = 0
-      while (i < dim) { s += q(i).toDouble * cent(i); i += 1 }
-      scores(c) = s
-      c += 1
-    }
-    val order = (0 until numCells).sortBy(c => (-scores(c), c))
-    order.take(math.min(nprobe, numCells)).toArray
-  }
-
-  // gang sizing mirrors LocalIndex: enough probed rows per worker that
-  // dispatch (~1us spinning) stays negligible against the cell scans
-  private val MinChunk = 2048
-  private val maxThreads =
-    math.max(1, math.min(Runtime.getRuntime.availableProcessors(), 16))
-  private val gangSize = math.max(1, math.min(maxThreads, count / MinChunk))
-  private val gang = if (gangSize > 1) new ScanGang(gangSize) else null
-  private val gangLock = new java.util.concurrent.locks.ReentrantLock()
-
-  private[graft] def routeOnly(q: Array[Byte], nprobe: Int): Int =
-    routeCells(q, nprobe).length
-
-  /** Probed search: route to `nprobe` cells, exact int8 SIMD scan within
-    * them — same scores as the flat LocalIndex on the scanned rows. */
-  def search(q: Array[Byte], k: Int, nprobe: Int): Seq[(Long, Double)] = {
-    require(q.length == dim, s"query dimension ${q.length} != $dim")
-    val qShort = new Array[Short](dim)
-    var i = 0
-    while (i < dim) { qShort(i) = q(i).toShort; i += 1 }
-    val nq = VectorKernels.normSqInt8(q)
-    val cells = routeCells(q, nprobe)
-    val merged = new TopKBuffer(k)
-    if (gang != null && cells.length > 1 && gangLock.tryLock()) {
-      try {
-        val bufs = new Array[TopKBuffer](gang.n)
-        gang.run { w =>
-          val buf = new TopKBuffer(k)
-          var ci = w
-          while (ci < cells.length) {
-            val c = cells(ci)
-            SimdSupport.scan(cellData(c), cellNorms(c), cellIds(c),
-              0, cellIds(c).length, dim, qShort, nq, buf)
-            ci += gang.n
-          }
-          bufs(w) = buf
-        }
-        bufs.foreach(merged.mergeFrom)
-      } finally gangLock.unlock()
-    } else {
-      // gang busy (concurrent burst), single probed cell, or corpus too
-      // small for fan-out: scan on the calling thread
-      var ci = 0
-      while (ci < cells.length) {
-        val c = cells(ci)
-        SimdSupport.scan(cellData(c), cellNorms(c), cellIds(c),
-          0, cellIds(c).length, dim, qShort, nq, merged)
-        ci += 1
-      }
-    }
-    (0 until merged.size).map(j => (merged.ids(j), merged.scores(j)))
-  }
+  def search(q: Array[Byte], k: Int, nprobe: Int): Seq[(Long, Double)] =
+    e.search(e.routeCells(q.map(_.toFloat), nprobe), e.int8Scan(q), k)
 }
 
 object LocalIvfIndex {
 
-  /** Pack (id, int8 vector, cell) triples into the per-cell layout. */
-  private def pack(centroids: Array[Array[Float]],
-      ids: Array[Long], codes: Array[Array[Byte]], cells: Array[Int],
-      dim: Int): LocalIvfIndex = {
-    val numCells = centroids.length
-    val counts = new Array[Int](numCells)
-    cells.foreach(c => counts(c) += 1)
-    val cellIds = Array.tabulate(numCells)(c => new Array[Long](counts(c)))
-    val cellData = Array.tabulate(numCells)(c => new Array[Short](counts(c) * dim))
-    val cellNorms = Array.tabulate(numCells)(c => new Array[Long](counts(c)))
-    val fill = new Array[Int](numCells)
-    var r = 0
-    while (r < ids.length) {
-      val c = cells(r)
-      val slot = fill(c)
-      cellIds(c)(slot) = ids(r)
-      val code = codes(r)
-      val base = slot * dim
-      var j = 0
-      var n = 0L
-      while (j < dim) {
-        val x = code(j)
-        cellData(c)(base + j) = x.toShort
-        n += x.toLong * x
-        j += 1
-      }
-      cellNorms(c)(slot) = n
-      fill(c) = slot + 1
-      r += 1
-    }
-    new LocalIvfIndex(normalize(centroids), cellIds, cellData, cellNorms, dim)
-  }
-
-  private[store] def normalize(cs: Array[Array[Float]]): Array[Array[Float]] =
-    cs.map { c =>
-      var n = 0.0
-      var i = 0
-      while (i < c.length) { n += c(i).toDouble * c(i); i += 1 }
-      val inv = if (n == 0.0) 0.0 else 1.0 / math.sqrt(n)
-      c.map(x => (x * inv).toFloat)
-    }
-
-  private[store] def argmaxCell(v: Array[Float], unitCents: Array[Array[Float]]): Int = {
-    // cosine argmax = dot argmax against unit centroids (|v| constant)
-    var best = 0
-    var bestS = Double.NegativeInfinity
-    var c = 0
-    while (c < unitCents.length) {
-      val cent = unitCents(c)
-      var s = 0.0
-      var i = 0
-      while (i < v.length) { s += v(i).toDouble * cent(i); i += 1 }
-      if (s > bestS) { bestS = s; best = c }
-      c += 1
-    }
-    best
-  }
-
-  /** Driver-side spherical k-means (seeded sample init + `iters` Lloyd
-    * refinements over a bounded sample, then one full assignment pass).
-    * Work is O(sample x numCells x dim x iters + n x numCells x dim) —
-    * bounded like the other local replicas' builds. */
+  /** Driver-side k-means cells, for corpora without an at-rest layout. */
   def train(ids: Array[Long], vecs: Array[Array[Float]], numCells: Int,
-      nprobeSample: Int = 10000, iters: Int = 5, seed: Long = 11L): LocalIvfIndex = {
-    val cents = trainCentroids(vecs, numCells, nprobeSample, iters, seed)
-    val dim = vecs(0).length
-    val codes = vecs.map(VectorKernels.quantize)
-    val cells = vecs.map(argmaxCell(_, cents))
-    pack(cents, ids, codes, cells, dim)
-  }
+      nprobeSample: Int = 10000, iters: Int = 5, seed: Long = 11L): LocalIvfIndex =
+    new LocalIvfIndex(CellScan.train(ids, vecs, numCells, nprobeSample, iters, seed)(
+      (_, _) => null)._1)
 
-  /** The coarse quantizer shared by all three local IVF tiers (flat /
-    * PQ / BQ): seeded sample init + `iters` Lloyd refinements over a
-    * bounded sample. Returns UNIT centroids (routing ranks by dot). */
-  private[store] def trainCentroids(vecs: Array[Array[Float]], numCells: Int,
-      nprobeSample: Int = 10000, iters: Int = 5, seed: Long = 11L): Array[Array[Float]] = {
-    require(vecs.nonEmpty, "trainCentroids: empty corpus")
-    require(numCells > 0 && numCells <= vecs.length,
-      s"trainCentroids: numCells $numCells out of range for ${vecs.length} vectors")
-    val dim = vecs(0).length
-    val rnd = new scala.util.Random(seed)
-    val sample =
-      if (vecs.length <= nprobeSample) vecs
-      else Array.fill(nprobeSample)(vecs(rnd.nextInt(vecs.length)))
-    // init: distinct random sample rows
-    var cents = normalize(rnd.shuffle(sample.indices.toVector)
-      .take(numCells).map(i => sample(i).clone()).toArray)
-    var it = 0
-    while (it < iters) {
-      val sums = Array.fill(numCells)(new Array[Double](dim))
-      val ns = new Array[Int](numCells)
-      sample.foreach { v =>
-        val c = argmaxCell(v, cents)
-        val s = sums(c)
-        var i = 0
-        while (i < dim) { s(i) += v(i); i += 1 }
-        ns(c) += 1
-      }
-      cents = normalize(Array.tabulate(numCells) { c =>
-        if (ns(c) == 0) cents(c) // empty cell keeps its centroid
-        else sums(c).map(x => (x / ns(c)).toFloat)
-      })
-      it += 1
-    }
-    cents
-  }
-
-  /** In-process replica of an at-rest [[IvfIndex]] layout: routes on the
-    * SAME saved centroids sidecar the distributed probes use and reuses
-    * the at-rest cell assignment verbatim (no re-assignment — the frozen
-    * quantizer contract). Guarded like QuantizedIndex.toLocal: refuses
-    * corpora whose materialized replica would exceed `maxLocalBytes`. */
+  /** Replica of an at-rest [[IvfIndex]] layout on its SAME centroids
+    * sidecar: a rebuild() refreshes replicas on their next load. */
   def fromAtRest(spark: SparkSession, path: String,
-      maxLocalBytes: Long = QuantizedIndex.DefaultMaxLocalBytes): LocalIvfIndex = {
-    val centRows = spark.read.parquet(s"$path/centroids")
-      .select(col("cell"), col("centroid").cast("array<float>"))
-      .collect() // numCells rows — sidecar-sized by construction
-      .map(r => r.getInt(0) -> r.getSeq[Float](1).toArray).sortBy(_._1)
-    require(centRows.nonEmpty, s"fromAtRest: no centroids under $path")
-    // cells are hive-partition values; remap (possibly sparse) ids to a
-    // dense [0, numCells) routing index
-    val cellOf = centRows.map(_._1).zipWithIndex.toMap
-    // quantize EXECUTOR-side (codegen'd QuantizeInt8Expr — the same
-    // VectorKernels.quantize the driver loop used to run) so what crosses
-    // to the driver is a compact (long, dim bytes, int) row, and stream
-    // it with toLocalIterator so only ~one partition of rows is ever
-    // resident beside the packed arrays — a full collect() materializes
-    // boxed Seq[Float] Rows at 5-10x the 4-bytes-per-float the old peak
-    // estimate charged, which could OOM the driver inside the guard.
-    val data = spark.read.parquet(s"$path/data")
-      .select(col("vec_id"),
-        graft.functions.VectorOps.quantizeInt8(
-          col("embedding").cast("array<float>")).as("code"),
-        col("cell"))
-    val n = data.count()
-    require(n <= Int.MaxValue, s"fromAtRest: corpus too large ($n rows)")
-    val dim = centRows(0)._2.length
-    // replica peak: short data (2*dim) + ids (8) + norms (8) per vector,
-    // plus the streamed byte codes (dim + ~48 object overhead) per vector
-    val peak = n * (7L * dim + 64L)
-    require(peak <= maxLocalBytes,
-      s"fromAtRest refused: materializing this corpus needs ~$peak bytes " +
-        s"of driver heap at peak (> limit $maxLocalBytes). Use IvfIndex" +
-        ".probe (distributed), or raise the limit explicitly.")
-    val ids = new Array[Long](n.toInt)
-    val codes = new Array[Array[Byte]](n.toInt)
-    val cells = new Array[Int](n.toInt)
-    var i = 0
-    val it = data.toLocalIterator()
-    while (it.hasNext) {
-      val r = it.next()
-      ids(i) = r.getLong(0)
-      codes(i) = r.getAs[Array[Byte]](1)
-      cells(i) = cellOf(r.getInt(2))
-      i += 1
-    }
-    require(i == n, s"fromAtRest: row count changed during load ($n -> $i)")
-    pack(centRows.map(_._2), ids, codes, cells, dim)
-  }
+      maxLocalBytes: Long = QuantizedIndex.DefaultMaxLocalBytes): LocalIvfIndex =
+    // peak per row: short data (2*dim) + ids + norms, plus the streamed
+    // byte code (dim + ~48 object overhead)
+    new LocalIvfIndex(CellScan.load(spark, path, null, null, d => 7L * d + 64,
+      maxLocalBytes, "IvfIndex.probe")((_, _) => null)._1)
 }

@@ -1,370 +1,56 @@
 package graft.store
 
-import graft.functions.{SimdSupport, TopKBuffer, VectorKernels}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** IVF routing composed with PQ compression + exact rescore — the standard
-  * production serving shape for large in-process replicas (the FAISS
-  * `IVFx,PQy` + refine layout): a query
-  *
-  *  1. ROUTES on the coarse centroids (numCells float dots),
-  *  2. ADC-SCANS only its `nprobe` cells' PQ codes (m LUT adds per row
-  *     over m bytes/row — the only per-row cost that touches the big
-  *     resident array, so the scan working set is `nprobe/numCells` of
-  *     an already-16x-compressed corpus),
-  *  3. RESCORES the top `candK` ADC candidates exactly on their int8
-  *     codes (the same SimdSupport cosine as the flat tier), so the
-  *     final ranking is exact over the candidate set.
-  *
-  * Compared to the single-axis tiers this composes BOTH levers: the scan
-  * fraction of LocalIvfIndex and the bytes/row of LocalPqIndex. The int8
-  * codes are kept beside the PQ codes for the rescore step only — per
-  * query it touches candK rows, not the corpus, which is why production
-  * replicas can afford to spill that array cold (here it stays on heap;
-  * the SCAN path never reads it).
-  *
-  * Determinism: ADC candidate selection breaks ties by cell-major row
-  * index; the exact rescore re-ranks by (score DESC, vec_id ASC) — with a
-  * fixed build, results are bitwise reproducible, and with candK >= the
-  * probed row count they EQUAL the cell-restricted exact search
-  * (spec-gated, LocalIvfQuantSpec).
-  *
-  * Flat cell-major layout: row r of cell c lives at flat index
-  * [cellStart(c), cellStart(c+1)); `ids`/`norms` align, PQ codes at
-  * r*m, int8 at r*dim.
-  */
-final class LocalIvfPqIndex private (
-    unitCentroids: Array[Array[Float]],
-    cellStart: Array[Int],
-    idsFlat: Array[Long],
-    pqCodes: Array[Byte],
-    int8: Array[Short],
-    norms: Array[Long],
-    m: Int, kSub: Int, codebook: Array[Double],
-    val dim: Int) {
-
-  val numCells: Int = unitCentroids.length
-  val count: Int = idsFlat.length
+/** IVF routing composed with PQ and an exact rescore (FAISS `IVFx,PQy` +
+  * refine): ADC-scan the probed cells' m-byte codes, rescore the top
+  * `candK` exactly in int8 (candK rows per query, never scanned). With
+  * candK >= the probed rows it EQUALS exactInProbe (LocalIvfQuantSpec). */
+final class LocalIvfPqIndex private (e: CellScan, pq: PqCode) {
+  val dim: Int = e.dim
+  val numCells: Int = e.numCells
+  val count: Int = e.count
 
   /** Rows ADC-scanned by an `nprobe`-cell probe of this query. */
-  def probedRows(q: Array[Float], nprobe: Int): Int =
-    routeCells(q, nprobe).map(c => cellStart(c + 1) - cellStart(c)).sum
+  def probedRows(q: Array[Float], nprobe: Int): Int = e.probedRows(e.routeCells(q, nprobe))
 
-  private[store] def routeCells(q: Array[Float], nprobe: Int): Array[Int] = {
-    val scores = new Array[Double](numCells)
-    var c = 0
-    while (c < numCells) {
-      val cent = unitCentroids(c)
-      var s = 0.0
-      var i = 0
-      while (i < dim) { s += q(i).toDouble * cent(i); i += 1 }
-      scores(c) = s
-      c += 1
-    }
-    val order = (0 until numCells).sortBy(c => (-scores(c), c))
-    order.take(math.min(nprobe, numCells)).toArray
-  }
+  /** Same routing, exact int8 scan of EVERY probed row. */
+  def exactInProbe(q: Array[Float], topK: Int, nprobe: Int): Seq[(Long, Double)] =
+    e.exactInProbe(q, topK, nprobe)
 
-  // gang sizing mirrors the other local tiers (cells are the scan units)
-  private val MinChunk = 2048
-  private val maxThreads =
-    math.max(1, math.min(Runtime.getRuntime.availableProcessors(), 16))
-  private val gangSize = math.max(1, math.min(maxThreads, count / MinChunk))
-  private val gang = if (gangSize > 1) new ScanGang(gangSize) else null
-  private val gangLock = new java.util.concurrent.locks.ReentrantLock()
-
-  /** ADC-scan one cell's PQ codes, candidates keyed by FLAT ROW INDEX
-    * (the rescore handle; deterministic cell-major tie order). */
-  private def adcScanCell(c: Int, lut: Array[Double], buf: CandidateHeap): Unit = {
-    var r = cellStart(c)
-    val end = cellStart(c + 1)
-    // Four independent accumulator chains instead of one: the naive
-    // single-accumulator loop is a DEPENDENT double-add chain (~4-cycle
-    // FP-add latency x m = ~32 cycles/row at m=8), which measurably
-    // capped the 1M-point ADC scan at ~1.6k QPS — the same per-row cost
-    // as the SIMD int8-128 dot it is supposed to beat. Splitting the
-    // adds across 4 chains exposes their ILP; the final combine
-    // (a0+a1)+(a2+a3) is a FIXED order, so scores stay deterministic
-    // (a different fixed rounding order than the serial chain — candidate
-    // SETS can shift by an ulp at the candK boundary, but the exact
-    // rescore re-ranks candidates, and the covering-candK equivalence
-    // chain in LocalIvfQuantSpec is rounding-independent by design).
-    while (r < end) {
-      val base = r * m
-      var acc0 = 0.0; var acc1 = 0.0; var acc2 = 0.0; var acc3 = 0.0
-      var sub = 0
-      while (sub + 4 <= m) {
-        acc0 += lut(sub * kSub + (pqCodes(base + sub) & 0xff))
-        acc1 += lut((sub + 1) * kSub + (pqCodes(base + sub + 1) & 0xff))
-        acc2 += lut((sub + 2) * kSub + (pqCodes(base + sub + 2) & 0xff))
-        acc3 += lut((sub + 3) * kSub + (pqCodes(base + sub + 3) & 0xff))
-        sub += 4
-      }
-      while (sub < m) {
-        acc0 += lut(sub * kSub + (pqCodes(base + sub) & 0xff))
-        sub += 1
-      }
-      buf.insert((acc0 + acc1) + (acc2 + acc3), r.toLong)
-      r += 1
-    }
-  }
-
-  /** The rescore-everything reference path: identical routing, exact int8
-    * scan of EVERY probed row (no ADC stage). search() with candK >= the
-    * probed row count must equal this bitwise (spec-gated); at
-    * nprobe = numCells it equals the flat tier's exact search. */
-  def exactInProbe(q: Array[Float], topK: Int, nprobe: Int): Seq[(Long, Double)] = {
-    require(q.length == dim, s"query dimension ${q.length} != $dim")
-    val qb = VectorKernels.quantize(q)
-    val qShort = new Array[Short](dim)
-    var i = 0
-    while (i < dim) { qShort(i) = qb(i).toShort; i += 1 }
-    val nq = VectorKernels.normSqInt8(qb)
-    val out = new TopKBuffer(topK)
-    routeCells(q, nprobe).foreach { c =>
-      SimdSupport.scan(int8, norms, idsFlat, cellStart(c), cellStart(c + 1),
-        dim, qShort, nq, out)
-    }
-    (0 until out.size).map(k => (out.ids(k), out.scores(k)))
-  }
-
-  /** Route -> ADC scan probed cells -> exact int8 rescore of the top
-    * `candK` candidates -> top-`topK` (score DESC, vec_id ASC). */
-  def search(q: Array[Float], topK: Int, nprobe: Int, candK: Int): Seq[(Long, Double)] = {
-    require(q.length == dim, s"query dimension ${q.length} != $dim")
-    require(candK >= topK, s"candK $candK < topK $topK")
-    val lut = VectorKernels.pqLut(q, codebook, m, kSub)
-    val cells = routeCells(q, nprobe)
-    val qb = VectorKernels.quantize(q)
-    val qShort = new Array[Short](dim)
-    var i = 0
-    while (i < dim) { qShort(i) = qb(i).toShort; i += 1 }
-    val nq = VectorKernels.normSqInt8(qb)
-    val out = new TopKBuffer(topK)
-    if (gang != null && cells.length > 1 && gangLock.tryLock()) {
-      try {
-        // ONE gang dispatch per query — gang.run's wake/join latency
-        // (~100-300 us) dominates the composed tier's actual work
-        // (measured: a second gang.run halved QPS), so the three phases
-        // run inside a single dispatch with an internal barrier:
-        //  A (parallel): stride cells over workers, each keeps ITS
-        //    top-candK and heap-sorts it in place — the near-tie
-        //    sift-down work stays on the worker cores;
-        //  B (one worker): the LAST worker through the barrier runs the
-        //    global top-candK k-way head select over the sorted lists
-        //    (candK x gang.n compares, ~10 us; no duplicates — each row
-        //    is scanned by exactly one worker) while the rest spin;
-        //  C (parallel): exact rescore of the scattered candidate rows —
-        //    DRAM-latency bound sequentially (~4 cold lines per row), so
-        //    the independent misses stride over the gang. TopKBuffer's
-        //    total order keeps the merged result bitwise equal to the
-        //    sequential path.
-        val bufs = new Array[CandidateHeap](gang.n)
-        val outs = new Array[TopKBuffer](gang.n)
-        val candIdx = new Array[Int](candK)
-        val doneA = new java.util.concurrent.atomic.AtomicInteger(0)
-        val cnBox = new java.util.concurrent.atomic.AtomicInteger(-1)
-        gang.run { w =>
-          // The barrier MUST be reached (finally) and the select MUST
-          // publish (finally, 0-candidate sentinel on failure): a crash
-          // in phase A or in the select would otherwise leave peers
-          // spinning on cnBox forever — done never reaches gang.n and
-          // the query thread hangs inside gang.run holding gangLock.
-          // The crash itself still surfaces: ScanGang.run rethrows the
-          // first stashed worker failure on the query thread.
-          try {
-            val buf = new CandidateHeap(candK)
-            var ci = w
-            while (ci < cells.length) { adcScanCell(cells(ci), lut, buf); ci += gang.n }
-            buf.sortIntoDesc()
-            bufs(w) = buf
-          } finally {
-            if (doneA.incrementAndGet() == gang.n) {
-              var cn = 0
-              try cn = CandidateSelect.kWayTopIdx(bufs, candK, candIdx)
-              finally cnBox.set(cn) // release: publishes candIdx (or the sentinel)
-            } else {
-              while (cnBox.get() < 0) Thread.onSpinWait()
-            }
-          }
-          val cn = cnBox.get()
-          val o = new TopKBuffer(topK)
-          var j = w
-          while (j < cn) {
-            val r = candIdx(j)
-            SimdSupport.scan(int8, norms, idsFlat, r, r + 1, dim, qShort, nq, o)
-            j += gang.n
-          }
-          outs(w) = o
-        }
-        outs.foreach(out.mergeFrom)
-      } finally gangLock.unlock()
-    } else {
-      val cand = new CandidateHeap(candK)
-      var ci = 0
-      while (ci < cells.length) { adcScanCell(cells(ci), lut, cand); ci += 1 }
-      // exact rescore: candK single-row exact cosines — identical scoring
-      // to the flat int8 tier on the surviving candidates
-      var j = 0
-      while (j < cand.size) {
-        val r = cand.ids(j).toInt
-        SimdSupport.scan(int8, norms, idsFlat, r, r + 1, dim, qShort, nq, out)
-        j += 1
-      }
-    }
-    (0 until out.size).map(k => (out.ids(k), out.scores(k)))
-  }
+  /** Route, ADC-scan, rescore the top `candK` exactly: top-`topK`. */
+  def search(q: Array[Float], topK: Int, nprobe: Int, candK: Int): Seq[(Long, Double)] =
+    e.searchRescored(q, topK, nprobe, candK, pq.scan)
 }
 
 object LocalIvfPqIndex {
 
-  /** In-process replica of an at-rest [[IvfPqIndex]] layout (plain-PQ
-    * form only): routes on the SAME saved centroids sidecar the
-    * distributed probes use, ADC-scans the SAME frozen-codebook codes,
-    * and rescores on int8 codes quantized EXECUTOR-side from the
-    * caller-supplied float source — the at-rest layout keeps no floats,
-    * so the rescore source is a parameter exactly as in
-    * IvfPqIndex.probeRescored. Refuses OPQ-rotated and residual-coded
-    * layouts (their coding spaces need the probe-side rotation /
-    * per-cell q·c constants — use the distributed probes there); the
-    * refusal is the format-flag sidecar check, so a replica can never
-    * silently mis-score a rotated index. Guarded like
-    * LocalIvfIndex.fromAtRest: refuses corpora whose replica exceeds
-    * `maxLocalBytes`, streams rows via toLocalIterator. */
-  def fromAtRest(spark: org.apache.spark.sql.SparkSession, path: String,
-      emb: org.apache.spark.sql.DataFrame,
+  /** Replica of a plain-PQ at-rest [[IvfPqIndex]] layout: its SAME centroids
+    * and codes, rescored in int8 from the float source `emb` (the layout
+    * keeps no floats), which must hold every indexed vec_id exactly once.
+    * OPQ and residual layouts are refused by their format flags: their
+    * coding spaces need probe-side rotation or per-cell q·c constants. */
+  def fromAtRest(spark: SparkSession, path: String, emb: DataFrame,
       maxLocalBytes: Long = QuantizedIndex.DefaultMaxLocalBytes): LocalIvfPqIndex = {
-    import org.apache.spark.sql.functions._
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(!fs.exists(new org.apache.hadoop.fs.Path(s"$path/rotation")),
-      "fromAtRest: OPQ-rotated layout — the replica scans original-space " +
-        "LUTs; use IvfPqIndex.probe (distributed) for rotated indexes")
-    require(!fs.exists(new org.apache.hadoop.fs.Path(s"$path/residual")),
-      "fromAtRest: residual-coded layout — ADC needs per-cell q·c " +
-        "constants; use IvfPqIndex.probe (distributed)")
-    val m = graft.ops.PqQueries.M
-    val kSub = graft.ops.PqQueries.K
-    val centRows = spark.read.parquet(s"$path/centroids")
-      .select(col("cell"), col("centroid").cast("array<float>"))
-      .collect() // numCells rows — sidecar-sized
-      .map(r => r.getInt(0) -> r.getSeq[Float](1).toArray).sortBy(_._1)
-    require(centRows.nonEmpty, s"fromAtRest: no centroids under $path")
-    val cellOf = centRows.map(_._1).zipWithIndex.toMap
-    val dim = centRows(0)._2.length
-    val cb = spark.read.parquet(s"$path/codebook")
-      .orderBy("idx").collect().map(_.getDouble(1))
-    val data = spark.read.parquet(s"$path/data")
-      .select(col("vec_id"), col("codes"), col("cell"))
-      .join(emb.select(col("vec_id"), col("embedding")), "vec_id")
-      .select(col("vec_id"), col("codes"), col("cell"),
-        graft.functions.VectorOps.quantizeInt8(
-          col("embedding").cast("array<float>")).as("q"))
-    // cell histogram first (tiny aggregate) so the flat arrays fill in
-    // one streamed pass without buffering the corpus twice
-    val cellCounts = spark.read.parquet(s"$path/data")
-      .groupBy(col("cell")).count().collect()
-      .map(r => cellOf(r.getInt(0)) -> r.getLong(1)).toMap
-    val numCells = centRows.length
-    // guard BEFORE the .toInt conversions: a per-cell count past 2^31
-    // would silently truncate and the peak-bytes require below would be
-    // evaluated on the wrapped value (LocalIvfIndex.fromAtRest's guard,
-    // mirrored here)
-    val total = cellCounts.valuesIterator.sum
-    require(total <= Int.MaxValue, s"fromAtRest: corpus too large ($total rows)")
-    val cellStart = new Array[Int](numCells + 1)
-    var c = 0
-    var acc = 0L
-    while (c < numCells) {
-      acc += cellCounts.getOrElse(c, 0L)
-      cellStart(c + 1) = acc.toInt
-      c += 1
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Seq("rotation" -> "OPQ-rotated", "residual" -> "residual-coded").foreach { case (flag, what) =>
+      require(!fs.exists(new Path(s"$path/$flag")),
+        s"fromAtRest: $what layout — use IvfPqIndex.probe (distributed)")
     }
-    val n = cellStart(numCells).toLong
-    val peak = n * (m + 7L * dim + 96L)
-    require(peak <= maxLocalBytes,
-      s"fromAtRest refused: materializing this corpus needs ~$peak bytes " +
-        s"of driver heap at peak (> limit $maxLocalBytes). Use IvfPqIndex" +
-        ".probe (distributed), or raise the limit explicitly.")
-    val idsFlat = new Array[Long](n.toInt)
-    val pqCodes = new Array[Byte](n.toInt * m)
-    val int8 = new Array[Short](n.toInt * dim)
-    val norms = new Array[Long](n.toInt)
-    val fill = cellStart.clone()
-    var filled = 0L
-    val it = data.toLocalIterator()
-    while (it.hasNext) {
-      val r = it.next()
-      val cell = cellOf(r.getInt(2))
-      val slot = fill(cell)
-      fill(cell) = slot + 1
-      idsFlat(slot) = r.getLong(0)
-      val pc = r.getAs[Array[Byte]](1)
-      require(pc.length == m, s"fromAtRest: code width ${pc.length} != $m")
-      System.arraycopy(pc, 0, pqCodes, slot * m, m)
-      val qb = r.getAs[Array[Byte]](3)
-      require(qb.length == dim, s"fromAtRest: embedding dim ${qb.length} != $dim")
-      val base = slot * dim
-      var i = 0
-      var nn = 0L
-      while (i < dim) {
-        val x = qb(i)
-        int8(base + i) = x.toShort
-        nn += x.toLong * x
-        i += 1
-      }
-      norms(slot) = nn
-      filled += 1
-    }
-    require(filled == n,
-      s"fromAtRest: $filled of $n code rows joined a float row — the " +
-        "rescore source must cover every indexed vec_id")
-    new LocalIvfPqIndex(centRows.map(_._2), cellStart, idsFlat, pqCodes,
-      int8, norms, m, kSub, cb, dim)
+    val (m, kSub) = (graft.ops.PqQueries.M, graft.ops.PqQueries.K)
+    val cb = spark.read.parquet(s"$path/codebook").orderBy("idx").collect().map(_.getDouble(1))
+    val (e, pq) = CellScan.load(spark, path, emb, "codes", d => m + 7L * d + 96,
+      maxLocalBytes, "IvfPqIndex.probe")((n, _) => new PqCode(new Array[Byte](n * m), m, kSub, cb))
+    new LocalIvfPqIndex(e, pq)
   }
 
-  /** Train: coarse centroids via the shared bounded k-means, rows packed
-    * cell-major, PQ codes + int8 rescore codes per row. The PQ codebook
-    * is caller-supplied (the PqQueries training path), matching how the
-    * flat LocalPqIndex is fed. */
+  /** Train the k-means cells; PQ codes from the caller's codebook. */
   def train(ids: Array[Long], vecs: Array[Array[Float]], numCells: Int,
       m: Int, kSub: Int, codebook: Array[Double],
       nprobeSample: Int = 10000, iters: Int = 5, seed: Long = 11L): LocalIvfPqIndex = {
-    require(ids.length == vecs.length && ids.nonEmpty, "mismatched build input")
-    val cents = LocalIvfIndex.trainCentroids(vecs, numCells, nprobeSample, iters, seed)
-    val dim = vecs(0).length
-    val cells = vecs.map(LocalIvfIndex.argmaxCell(_, cents))
-    val counts = new Array[Int](numCells)
-    cells.foreach(c => counts(c) += 1)
-    val cellStart = new Array[Int](numCells + 1)
-    var c = 0
-    while (c < numCells) { cellStart(c + 1) = cellStart(c) + counts(c); c += 1 }
-    val n = ids.length
-    val idsFlat = new Array[Long](n)
-    val pqCodes = new Array[Byte](n * m)
-    val int8 = new Array[Short](n * dim)
-    val norms = new Array[Long](n)
-    val fill = cellStart.clone()
-    var r = 0
-    while (r < n) {
-      val slot = fill(cells(r))
-      fill(cells(r)) = slot + 1
-      idsFlat(slot) = ids(r)
-      val pc = VectorKernels.pqEncode(vecs(r), codebook, m, kSub)
-      System.arraycopy(pc, 0, pqCodes, slot * m, m)
-      val qb = VectorKernels.quantize(vecs(r))
-      val base = slot * dim
-      var i = 0
-      var nn = 0L
-      while (i < dim) {
-        val x = qb(i)
-        int8(base + i) = x.toShort
-        nn += x.toLong * x
-        i += 1
-      }
-      norms(slot) = nn
-      r += 1
-    }
-    new LocalIvfPqIndex(cents, cellStart, idsFlat, pqCodes, int8, norms,
-      m, kSub, codebook, dim)
+    val (e, pq) = CellScan.train(ids, vecs, numCells, nprobeSample, iters, seed)(
+      (n, _) => new PqCode(new Array[Byte](n * m), m, kSub, codebook))
+    new LocalIvfPqIndex(e, pq)
   }
 }

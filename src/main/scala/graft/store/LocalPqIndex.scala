@@ -1,69 +1,20 @@
 package graft.store
 
-import graft.functions.{TopKBuffer, VectorKernels}
-
-/** In-process PQ serving replica — the ADC twin of LocalIndex's int8 SIMD
-  * scan, for measuring what the PQ residency tier buys at serving time:
-  * each row costs m LUT reads + adds (here 8) instead of dim
-  * multiply-accumulates (64/128), and the whole 50k-row corpus is
-  * m bytes/row (400 KB vs 3.2 MB int8 / 12.8 MB float), i.e. it lives in
-  * L2. Scores are approximate (quantized to the codebook); production
-  * rescores the top-candK exactly — Bench measures the raw scan.
-  *
-  * Codes layout: row-major n*m bytes (row r at [r*m, r*m+m)).
-  */
+/** In-process PQ serving replica: the ADC twin of LocalIndex's int8 scan.
+  * Each row costs m LUT reads + adds instead of dim multiply-adds, and a
+  * 50k-row corpus is m bytes/row (400 KB at m = 8, L2-resident). Scores
+  * are approximate (quantized to the codebook) and bitwise
+  * VectorKernels.pqAdc's. The one-cell, PQ-code, unrescored case of
+  * [[CellScan]]. `codes` is row-major n*m bytes (row r at [r*m, r*m+m)). */
 final class LocalPqIndex(ids: Array[Long], codes: Array[Byte],
     m: Int, k: Int, codebook: Array[Double]) {
   require(ids.nonEmpty, "empty index")
-  require(codes.length == ids.length * m,
-    s"codes ${codes.length} != ${ids.length}*$m")
+  require(codes.length == ids.length * m, s"codes ${codes.length} != ${ids.length}*$m")
+  private val e = CellScan.codesOnly(ids)
+  private val pq = new PqCode(codes, m, k, codebook)
   val count: Int = ids.length
 
-  // same worker-gang treatment as LocalIndex's int8 scan (fair serving
-  // comparison): chunked row ranges, deterministic TopKBuffer merge
-  private val MinChunk = 2048
-  private val maxThreads =
-    math.max(1, math.min(Runtime.getRuntime.availableProcessors(), 16))
-  private val gangSize = math.max(1, math.min(maxThreads, count / MinChunk))
-  private val gang = if (gangSize > 1) new ScanGang(gangSize) else null
-  private val gangLock = new java.util.concurrent.locks.ReentrantLock()
-
-  private def scanRange(lo: Int, hi: Int, lut: Array[Double],
-                        buf: TopKBuffer): Unit = {
-    var r = lo
-    while (r < hi) {
-      val base = r * m
-      var acc = 0.0
-      var sub = 0
-      while (sub < m) {
-        acc += lut(sub * k + (codes(base + sub) & 0xff))
-        sub += 1
-      }
-      buf.insert(acc, ids(r))
-      r += 1
-    }
-  }
-
   /** ADC top-`topK` (score DESC, id ASC) for a raw float query. */
-  def search(q: Array[Float], topK: Int): Seq[(Long, Double)] = {
-    val lut = VectorKernels.pqLut(q, codebook, m, k)
-    val merged = new TopKBuffer(topK)
-    if (gang != null && gangLock.tryLock()) {
-      try {
-        val per = (count + gangSize - 1) / gangSize
-        val bufs = new Array[TopKBuffer](gangSize)
-        gang.run { c =>
-          val lo = c * per
-          val hi = math.min(count, lo + per)
-          val buf = new TopKBuffer(topK)
-          scanRange(lo, hi, lut, buf)
-          bufs(c) = buf
-        }
-        bufs.foreach(merged.mergeFrom)
-      } finally gangLock.unlock()
-    } else {
-      scanRange(0, count, lut, merged)
-    }
-    (0 until merged.size).map(j => (merged.ids(j), merged.scores(j)))
-  }
+  def search(q: Array[Float], topK: Int): Seq[(Long, Double)] =
+    e.search(e.allCells, pq.scan(q), topK)
 }

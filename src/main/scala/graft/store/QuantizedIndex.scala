@@ -135,83 +135,19 @@ final class QuantizedIndex private (
 }
 
 /** In-process (driver-side) index: same scores as the distributed path
-  * (bitwise), no job scheduling per query. The corpus is repacked into ONE
-  * contiguous short[] and scanned by a fixed thread pool over row ranges —
-  * SIMD inner loop, ~microseconds per 50k x 128 search. */
+  * (bitwise), no job scheduling per query. The flat int8 case of
+  * [[CellScan]]: one cell, the SIMD cosine kernel, rows split over the
+  * shared scan gang (0.17 ms per 50k x 128 search on 32 cores, r16). */
 final class LocalIndex(blocks: Array[VectorBlock], val dim: Int) {
-
-  val count: Int = blocks.map(_.n).sum
-
-  private val data = new Array[Short](count * dim)
-  private val ids = new Array[Long](count)
-  private val rowNorms = new Array[Long](count)
-  locally {
-    var off = 0
-    blocks.foreach { blk =>
-      var r = 0
-      while (r < blk.n) {
-        val srcBase = r * dim
-        val dstBase = (off + r) * dim
-        var j = 0
-        while (j < dim) { data(dstBase + j) = blk.data(srcBase + j).toShort; j += 1 }
-        ids(off + r) = blk.ids(r)
-        var s = 0L
-        var i = srcBase
-        val end = srcBase + dim
-        while (i < end) { val x = blk.data(i).toLong; s += x * x; i += 1 }
-        rowNorms(off + r) = s
-        r += 1
-      }
-      off += blk.n
-    }
+  private val e = {
+    val p = new Packer(Array(0, blocks.map(_.n).sum), dim)
+    blocks.foreach(b => (0 until b.n).foreach(r =>
+      p.put(0, b.ids(r), java.util.Arrays.copyOfRange(b.data, r * dim, r * dim + dim))))
+    p.result(Array(new Array[Float](dim)))
   }
+  val count: Int = e.count
 
-  // worker gang; a chunk is >= MinChunk rows so small corpora don't pay
-  // dispatch overhead
-  private val MinChunk = 2048
-  private val maxThreads =
-    math.max(1, math.min(Runtime.getRuntime.availableProcessors(), 16))
-  private val gangSize = math.max(1, math.min(maxThreads, count / MinChunk))
-  private val gang = if (gangSize > 1) new ScanGang(gangSize) else null
-
-  // Concurrency model (NOT the reference's RLock, pythonvectordb.py:362,
-  // which serializes every search): a lone caller takes the whole scan
-  // gang for minimum latency; when callers overlap, each extra caller
-  // scans the corpus on its OWN thread instead of queueing, so aggregate
-  // throughput scales with cores. The corpus arrays are immutable after
-  // construction, so unsynchronized reads are safe; TopKBuffer's total
-  // (score desc, id asc) order makes chunked-merge and sequential-scan
-  // results bitwise identical (asserted by SimdSpec).
-  private val gangLock = new java.util.concurrent.locks.ReentrantLock()
-
-  /** Thread-parallel SIMD scan, deterministic merge. */
-  def search(q: Array[Byte], k: Int): Seq[(Long, Double)] = {
-    require(q.length == dim, s"query dimension ${q.length} != $dim")
-    val nq = VectorKernels.normSqInt8(q)
-    val qShort = new Array[Short](dim)
-    var i = 0
-    while (i < dim) { qShort(i) = q(i).toShort; i += 1 }
-    val merged = new TopKBuffer(k)
-    if (gang != null && gangLock.tryLock()) {
-      try {
-        val per = (count + gangSize - 1) / gangSize
-        val bufs = new Array[TopKBuffer](gangSize)
-        gang.run { c =>
-          val lo = c * per
-          val hi = math.min(count, lo + per)
-          val buf = new TopKBuffer(k)
-          SimdSupport.scan(data, rowNorms, ids, lo, hi, dim, qShort, nq, buf)
-          bufs(c) = buf
-        }
-        bufs.foreach(merged.mergeFrom)
-      } finally gangLock.unlock()
-    } else {
-      // gang busy (concurrent burst) or corpus too small for fan-out:
-      // full scan on the calling thread
-      SimdSupport.scan(data, rowNorms, ids, 0, count, dim, qShort, nq, merged)
-    }
-    (0 until merged.size).map(j => (merged.ids(j), merged.scores(j)))
-  }
+  def search(q: Array[Byte], k: Int): Seq[(Long, Double)] = e.search(e.allCells, e.int8Scan(q), k)
 }
 
 /** Fixed gang of daemon scan workers with spin-then-park waiting: during a
@@ -269,9 +205,10 @@ private[store] final class ScanGang(val n: Int) {
   workers.foreach(_.start())
 
   /** Run job(0..n-1) on the gang; returns when all are done. Callers must
-    * serialize runs: LocalIndex.search only enters here under gangLock
-    * (tryLock winners); losers scan on their own thread instead. Any new
-    * call path must hold that lock — job/done/epoch are shared state. */
+    * serialize runs: CellScan.search only enters here under
+    * CellScan.gangLock (tryLock winners); losers scan on their own thread
+    * instead. Any new call path must hold that lock — job/done/epoch are
+    * shared state. */
   def run(f: Int => Unit): Unit = {
     job = f
     done.set(0)

@@ -61,7 +61,7 @@ object Serving4m {
       } finally in.close()
     }
 
-    // the Bench/IvfQuantServeProbe clustered-corpus recipe, same seed
+    // Bench.servingClustered's clustered-corpus recipe, same seed
     val rnd = new scala.util.Random(97)
     val centers = Array.fill(nCenters)(
       Array.fill(dim)(rnd.nextGaussian().toFloat * 3f))

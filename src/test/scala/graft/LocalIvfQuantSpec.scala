@@ -65,6 +65,13 @@ class LocalIvfQuantSpec extends SparkSpec {
 
   private lazy val queryIdx: Seq[Int] = (0 until 20).map(_ * 97)
 
+  /** `emb` with the lowest vec_id dropped and the highest one repeated. */
+  private def dupAndMissing(emb: org.apache.spark.sql.DataFrame) = {
+    val ids = emb.select(min("vec_id"), max("vec_id")).head()
+    emb.filter(col("vec_id") =!= ids.getLong(0))
+      .unionByName(emb.filter(col("vec_id") === ids.getLong(1)))
+  }
+
   test("ivf-pq: full probe + full candK equals the flat exact scan") {
     queryIdx.foreach { qi =>
       val q = vecs(qi)
@@ -213,6 +220,9 @@ class LocalIvfQuantSpec extends SparkSpec {
     // a rescore source missing indexed ids fails loudly
     intercept[IllegalArgumentException](
       LocalIvfPqIndex.fromAtRest(spark, dir, emb.filter(col("vec_id") < 100)))
+    // so does one that repeats a vec_id and lacks another (same row count)
+    intercept[IllegalArgumentException](
+      LocalIvfPqIndex.fromAtRest(spark, dir, dupAndMissing(emb)))
     // an OPQ layout is refused (format-flag check)
     val dirOpq = java.nio.file.Files.createTempDirectory("ivfpq-local-opq").toString
     IvfPqIndex.buildOpq(emb, dirOpq)
@@ -240,6 +250,8 @@ class LocalIvfQuantSpec extends SparkSpec {
     }
     intercept[IllegalArgumentException](
       LocalIvfBqIndex.fromAtRest(spark, dir, emb.filter(col("vec_id") < 100)))
+    intercept[IllegalArgumentException](
+      LocalIvfBqIndex.fromAtRest(spark, dir, dupAndMissing(emb)))
   }
 
   test("guards: dimension mismatch and candK < topK fail loudly") {

@@ -126,5 +126,23 @@ class LocalIvfSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       LocalIvfIndex.train(Array(1L), Array(Array(1f)), numCells = 5)
     }
+    // ids and vectors must align one to one
+    val vs = Array.fill(8)(Array(1f, 2f, 3f))
+    intercept[IllegalArgumentException](LocalIvfIndex.train(Array.tabulate(7)(_.toLong), vs, 2))
+    intercept[IllegalArgumentException](LocalIvfIndex.train(Array.tabulate(9)(_.toLong), vs, 2))
+    // a hand-written layout: dim-4 centroid for cell 0, dim-3 rows
+    def layout(dataCell: Int, centDim: Int): String = {
+      import spark.implicits._
+      val dir = java.nio.file.Files.createTempDirectory("ivf-bad").toString
+      Seq((1L, Array(1f, 2f, 3f), dataCell), (2L, Array(3f, 2f, 1f), dataCell))
+        .toDF("vec_id", "embedding", "cell").write.partitionBy("cell").parquet(s"$dir/data")
+      Seq((0, Array.fill(centDim)(1.0))).toDF("cell", "centroid").write.parquet(s"$dir/centroids")
+      dir
+    }
+    // a row whose code width differs from the centroid dim
+    intercept[IllegalArgumentException](LocalIvfIndex.fromAtRest(spark, layout(0, 4)))
+    // a data cell with no centroid
+    intercept[IllegalArgumentException](LocalIvfIndex.fromAtRest(spark, layout(7, 3)))
+    assert(LocalIvfIndex.fromAtRest(spark, layout(0, 3)).count == 2)
   }
 }

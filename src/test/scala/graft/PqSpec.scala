@@ -100,22 +100,24 @@ class PqSpec extends SparkSpec {
   }
 
   test("LocalPqIndex gang scan equals the sequential scan (50k synthetic rows)") {
-    // big enough that the worker gang engages (count / 2048 > 1)
-    val rnd = new scala.util.Random(11)
-    val n = 50000
-    val dim = 64
-    val subdim = dim / M
-    val cb = Array.fill(M * K * subdim)(rnd.nextGaussian())
-    val ids = Array.tabulate(n)(_.toLong)
-    val codes = Array.fill(n * M)((rnd.nextInt(K)).toByte)
-    val idx = new store.LocalPqIndex(ids, codes, M, K, cb)
-    val q = Array.fill(dim)(rnd.nextGaussian().toFloat)
-    val got = idx.search(q, 10)
-    val lut = VectorKernels.pqLut(q, cb, M, K)
-    val expected = (0 until n).map { r =>
-      (r.toLong, VectorKernels.pqAdc(codes.slice(r * M, r * M + M), lut, K))
-    }.sortBy { case (id, s) => (-s, id) }.take(10)
-    assert(got == expected)
+    // big enough that the worker gang engages (count / 2048 > 1); 50,003
+    // is not a multiple of the kernel's 4-row interleave
+    for (n <- Seq(50000, 50003)) {
+      val rnd = new scala.util.Random(11)
+      val dim = 64
+      val subdim = dim / M
+      val cb = Array.fill(M * K * subdim)(rnd.nextGaussian())
+      val ids = Array.tabulate(n)(_.toLong)
+      val codes = Array.fill(n * M)((rnd.nextInt(K)).toByte)
+      val idx = new store.LocalPqIndex(ids, codes, M, K, cb)
+      val q = Array.fill(dim)(rnd.nextGaussian().toFloat)
+      val got = idx.search(q, 10)
+      val lut = VectorKernels.pqLut(q, cb, M, K)
+      val expected = (0 until n).map { r =>
+        (r.toLong, VectorKernels.pqAdc(codes.slice(r * M, r * M + M), lut, K))
+      }.sortBy { case (id, s) => (-s, id) }.take(10)
+      assert(got == expected)
+    }
   }
 
   test("LocalBqIndex gang scan equals a kernel replay (50k synthetic rows)") {

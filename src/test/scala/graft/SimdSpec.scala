@@ -105,10 +105,16 @@ class SimdSpec extends SparkSpec {
     rnd.nextBytes(data)
     val ids = Array.tabulate(n)(_.toLong)
     val idx = new LocalIndex(Array(VectorBlock(ids, data, dim)), dim)
+    // a second replica: every replica shares one scan gang, so threads on
+    // different replicas contend for it too
+    val data2 = new Array[Byte](n * dim)
+    rnd.nextBytes(data2)
+    val idx2 = new LocalIndex(Array(VectorBlock(ids, data2, dim)), dim)
     val queries = Array.fill(16) {
       val q = new Array[Byte](dim); rnd.nextBytes(q); q
     }
     val expected = queries.map(q => idx.search(q, 10))
+    val expected2 = queries.map(q => idx2.search(q, 10))
     val results = new Array[Seq[(Long, Double)]](16 * 25)
     val failures = new java.util.concurrent.atomic.AtomicInteger(0)
     val threads = (0 until 8).map { w =>
@@ -118,6 +124,15 @@ class SimdSpec extends SparkSpec {
             val qi = (w * 50 + i) % 16
             results((w * 50 + i) % results.length) = idx.search(queries(qi), 10)
             assert(results((w * 50 + i) % results.length) == expected(qi))
+          }
+        } catch { case _: Throwable => failures.incrementAndGet() })
+      th.start(); th
+    } ++ (0 until 4).map { w =>
+      val th = new Thread(() =>
+        try {
+          (0 until 50).foreach { i =>
+            val qi = (w * 50 + i) % 16
+            assert(idx2.search(queries(qi), 10) == expected2(qi))
           }
         } catch { case _: Throwable => failures.incrementAndGet() })
       th.start(); th

@@ -39,4 +39,26 @@ class ScanGangSpec extends AnyFunSuite {
     gang.run { _ => ok.incrementAndGet() }
     assert(ok.get() == 3)
   }
+
+  test("replicas share one scan gang: building starts no threads, searching one gang") {
+    import scala.jdk.CollectionConverters._
+    def gangThreads(): Int = Thread.getAllStackTraces.keySet.asScala
+      .count(t => t.isAlive && t.getName.startsWith("scan-gang-"))
+    val cap = math.min(Runtime.getRuntime.availableProcessors(), 16)
+    val before = gangThreads()
+    val rnd = new scala.util.Random(5)
+    val (n, dim) = (10000, 16)
+    val replicas = (0 until 20).map { _ =>
+      val data = new Array[Byte](n * dim)
+      rnd.nextBytes(data)
+      new LocalIndex(Array(VectorBlock(Array.tabulate(n)(_.toLong), data, dim)), dim)
+    }
+    // gangs this suite made itself above, or another spec's earlier use
+    // of the shared gang, may already be alive: count only new threads
+    assert(gangThreads() == before, "building a replica started scan threads")
+    val q = Array.fill[Byte](dim)(3)
+    replicas.foreach(r => assert(r.search(q, 5).size == 5))
+    val added = gangThreads() - before
+    assert(added <= cap, s"$added scan-gang threads for 20 replicas (cap $cap)")
+  }
 }
